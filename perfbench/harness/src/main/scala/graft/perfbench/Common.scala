@@ -1,8 +1,12 @@
 package graft.perfbench
 
-import java.lang.management.ManagementFactory
+import java.lang.management.{ManagementFactory, MemoryType}
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
+import javax.management.{NotificationEmitter, NotificationListener}
+import javax.management.openmbean.CompositeData
+import com.sun.management.GarbageCollectionNotificationInfo
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
@@ -27,7 +31,7 @@ object Args {
 final case class Metric(name: String, value: Double, unit: String, n: Long)
 
 /** A workload's outcome. `metrics` are the ones BENCHMARK.json names for
-  * this mode; `detail` are the issue-named figures printed above them. */
+  * this mode; `detail` are the further figures printed above them. */
 final case class Outcome(
     attempted: Long, failed: Long, problems: Seq[String],
     metrics: Seq[Metric], detail: Seq[Metric]) {
@@ -57,16 +61,54 @@ object Spark {
 
 /** JVM-level figures of the process under test. */
 object Jvm {
-  /** Heap in use right after a full collection, MB: the live set. The
-    * least of three collections a moment apart, so what background
-    * threads allocate in between does not count as live. */
-  def liveMb(): Double =
+  /** Heap figures of one timed window, MB. `residentMb` is the heap live
+    * after set-up and after the window, the larger; `peakMb` is the
+    * largest heap in use right after any collection in the window (of
+    * `collections`), never below `residentMb`. */
+  final case class Memory(residentMb: Double, peakMb: Double, collections: Long)
+
+  private val heapPools: Set[String] = ManagementFactory.getMemoryPoolMXBeans.asScala
+    .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+
+  /** Heap in use right after a full collection, MB: the resident set.
+    * The least of three collections a moment apart, because references
+    * Spark's cleaner releases on one collection are freed by the next. */
+  def residentMb(): Double =
     (1 to 3).map { _ =>
       System.gc()
       val used = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
       Thread.sleep(100)
       used
     }.min
+
+  /** Watches the heap over a timed window: made when set-up ends (it
+    * samples the resident set then), stopped when the window ends. In
+    * between it keeps the largest heap-after-collection any collection's
+    * GC notification reports (its heap pools summed), so memory that
+    * lives only inside an op counts when a collection lands inside it.
+    * On a generational collector that figure also holds old-generation
+    * garbage not yet marked, so it varies from run to run far more than
+    * the resident set. */
+  final class MemWatch {
+    private val residentStart = residentMb()
+    private val peak, seen = new AtomicLong
+    private val listener: NotificationListener = (n, _) =>
+      if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+        val info = GarbageCollectionNotificationInfo.from(n.getUserData.asInstanceOf[CompositeData])
+        peak.accumulateAndGet(info.getGcInfo.getMemoryUsageAfterGc.asScala
+          .collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum, math.max)
+        seen.incrementAndGet()
+      }
+    private val emitters = ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .collect { case e: NotificationEmitter => e }
+    emitters.foreach(_.addNotificationListener(listener, null, null))
+
+    def stop(): Memory = {
+      emitters.foreach(_.removeNotificationListener(listener))
+      val resident = math.max(residentStart, residentMb())
+      Memory(resident, math.max(resident, peak.get / 1048576.0), seen.get)
+    }
+  }
 
   /** Total collection time so far, ms, over every collector. */
   def gcMs(): Long =
@@ -121,12 +163,6 @@ object Json {
 object Layers {
   def med(xs: Seq[Double]): Double = if (xs.isEmpty) 0.0 else Stats.median(xs)
   def mean(xs: Seq[Double]): Double = if (xs.isEmpty) 0.0 else xs.sum / xs.size
-
-  /** The highest of p95, p90, p75 that the reporting rule allows, as
-    * (percentile, value); the median when none is. */
-  def tail(xs: Seq[Double]): (Double, Double) =
-    Seq(0.95, 0.90, 0.75).iterator.flatMap(p => Stats.percentile(xs, p).map(p -> _))
-      .nextOption().getOrElse(0.5 -> med(xs))
 
   /** Every per-layer metric BENCHMARK.json names, in its order: the ones
     * measured, and 0 for a layer this workload leaves idle. */

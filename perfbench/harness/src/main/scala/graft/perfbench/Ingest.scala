@@ -7,7 +7,7 @@ import scala.util.Random
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.PipelineOps
-import graft.streaming.{IngestBump, SemDedupStream, StateStore}
+import graft.streaming.{IngestBump, StateStore}
 
 /** `ingest_cdc`: one bumper (the ingest contract) maintaining the text and
   * trained-vector dedup verdicts under seeded CDC feeds.
@@ -126,17 +126,15 @@ object Ingest {
 
   /** Near-duplicate vectors for later bumps to admit: jittered copies of
     * seeded base vectors, renormalised, ids after the base range. */
-  private def extraVectors(spark: SparkSession, embs: DataFrame, seed: Long, n: Int): DataFrame = {
-    import spark.implicits._
+  private def extraVectors(base: IndexedSeq[(Long, Array[Float])], seed: Long, n: Int)
+      : IndexedSeq[(Long, Array[Float])] = {
     val r = new Random(seed ^ 0xe4b)
-    val base = embs.select("vec_id", "embedding").collect()
-      .map(row => row.getLong(0) -> row.getSeq[Float](1).toArray).sortBy(_._1)
     val maxId = base.last._1
     (1 to n).map { i =>
       val v = base(r.nextInt(base.length))._2.map(x => x + (r.nextGaussian() * 0.01).toFloat)
       val nrm = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
-      (maxId + i, v.map(_ / nrm).toSeq)
-    }.toDF("vec_id", "embedding")
+      (maxId + i, v.map(_ / nrm))
+    }
   }
 
   final case class BumpTimes(textS: Double, vecS: Double, totalS: Double, chainAfter: Int)
@@ -159,12 +157,20 @@ object Ingest {
     mark("documents ingested")
 
     // the vector universe: base embeddings plus the near-duplicates later
-    // bumps admit, quantized once; the quantizer trains once on the base
+    // bumps admit, quantized once; the quantizer trains once on the base.
+    // The raw floats stay on the driver for the verdict oracle.
     val embs = spark.read.parquet(s"${a.dataDir}/embeddings.parquet")
-    val nBase = embs.count()
-    val universe = PipelineOps.quantizedOf(
-      embs.select("vec_id", "embedding").unionByName(extraVectors(spark, embs, a.seed, (nBase / 5).toInt)))
-      .select("vec_id", "q", "nrm").localCheckpoint(true)
+    val base = embs.select("vec_id", "embedding").collect()
+      .map(row => row.getLong(0) -> row.getSeq[Float](1).toArray).sortBy(_._1).toIndexedSeq
+    val nBase = base.size.toLong
+    val extra = extraVectors(base, a.seed, (nBase / 5).toInt)
+    val universe = {
+      import spark.implicits._
+      PipelineOps.quantizedOf(embs.select("vec_id", "embedding")
+        .unionByName(extra.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")))
+        .select("vec_id", "q", "nrm").localCheckpoint(true)
+    }
+    val raw = (base ++ extra).toMap
     val baseQ = universe.where(col("vec_id") < nBase)
     val trained = PipelineOps.trainCentroids(baseQ, PipelineOps.semCells(nBase)).localCheckpoint(true)
     val vecs = new VecGen(a.seed, 0L until nBase, nBase until nBase + nBase / 5)
@@ -205,7 +211,7 @@ object Ingest {
     // no warm CDC bump: a bump's cost grows with the state chain's length,
     // and the first CDC bump after the initial ingest measured no slower
     // than the next, so a warm bump would only shift the window down-chain
-    val liveSetup = Jvm.liveMb()
+    val mem = new Jvm.MemWatch
     val setupS = (System.currentTimeMillis() - a.startMs) / 1000.0
     System.err.println(f"perfbench: set-up $setupS%.1f s")
 
@@ -224,19 +230,22 @@ object Ingest {
         (runs.map(_._1).toSeq, Nil, (runs.last._2, runs.last._3))
       }
     val gcMs = Jvm.gcMs() - gc0
-    val livePeak = math.max(liveSetup, Jvm.liveMb())
+    val memory = mem.stop()
 
     // oracles: the from-scratch p36 verdict over the final documents
-    // snapshot, and the one-shot p52 semantics over the final vectors
-    // against the same frozen quantizer
+    // snapshot, and the one-shot p52 verdict over the final vectors,
+    // computed on the driver from the raw floats (TrainedOracle)
     val finalDocs = spark.read.parquet(s"${a.workDir}/corpus/v$version")
     val textOk = same(verdicts._1, PipelineOps.dedupVerdictOf(finalDocs))
-    val fv = vecSnapshot()
-    val cap = PipelineOps.SemMaxCell
-    val oneShot = SemDedupStream.refreshTrained(trained, fv, None, cap, PipelineOps.SemDupThreshold)
-    val vecOk = same(verdicts._2, SemDedupStream.trainedVerdict(fv.select("vec_id"), oneShot, cap))
+    val expected = TrainedOracle.verdict(base, vecs.live.toSeq.map(id => id -> raw(id)),
+      PipelineOps.SemMaxCell, PipelineOps.SemDupThreshold)
+    val got = verdicts._2.select("vec_id", "cid", "dup_of", "kept").collect().map(r =>
+      TrainedOracle.Row(r.getLong(0), Option(r.get(1)).map(_ => r.getLong(1)),
+        Option(r.get(2)).map(_ => r.getLong(2)), r.getLong(3))).toSeq.sortBy(_.vecId)
+    val vecOk = got == expected
     val problems = (if (textOk) Nil else Seq("text verdict differs from the from-scratch p36 verdict")) ++
-      (if (vecOk) Nil else Seq("trained verdict differs from the one-shot p52 verdict"))
+      (if (vecOk) Nil else Seq("trained verdict differs from the driver-side p52 verdict: " +
+        got.diff(expected).take(3).mkString(", ")))
     mark("verdicts checked")
 
     val k = times.size
@@ -246,7 +255,7 @@ object Ingest {
     val metrics = Seq(
       Metric("setup_s", setupS, "s", 1),
       Metric("op_p50_ms", p50, "ms", k),
-      Metric("mem_live_peak_mb", livePeak, "MB", 2))
+      Metric("mem_resident_mb", memory.residentMb, "MB", 2))
     val detail = Seq(
       Metric("ingest.chain_s", chainS, "s", k),
       Metric("ingest.bump_p50_s", p50 / 1000, "s", k),
@@ -254,7 +263,8 @@ object Ingest {
       Metric("ingest.text_bump_s_p50", Stats.median(ts(_.textS)), "s", k),
       Metric("ingest.vec_bump_s_p50", Stats.median(ts(_.vecS)), "s", k),
       Metric("error_ratio", problems.size.toDouble / k, "ratio", k),
-      Metric("jvm.gc_ms_per_op", gcMs.toDouble / k, "ms", k))
+      Metric("jvm.gc_ms_per_op", gcMs.toDouble / k, "ms", k),
+      Metric("mem.live_peak_mb", memory.peakMb, "MB", memory.collections))
     if (a.trace) Outcome(k, problems.size, problems, Layers.complete(layer), metrics ++ detail ++ layer)
     else Outcome(k, problems.size, problems, metrics, detail)
   }

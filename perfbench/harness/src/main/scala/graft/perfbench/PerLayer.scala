@@ -14,7 +14,6 @@ object PerLayer {
     "server.format_ms_p50" -> "ms",
     "server.resolve_ms_per_query" -> "ms",
     "plan.build_ms_p50" -> "ms",
-    "plan.build_ms_tail" -> "ms",
     "plan.eager_jobs_per_query" -> "count",
     "catalyst.analysis_ms_p50" -> "ms",
     "catalyst.optimize_ms_p50" -> "ms",

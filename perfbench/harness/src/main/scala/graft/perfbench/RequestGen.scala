@@ -45,12 +45,37 @@ object RequestGen {
   val additive: IndexedSeq[String] = IndexedSeq("Quantity", "Row Count")
   val formats: IndexedSeq[String] = IndexedSeq("csv", "csv", "jsonrecords", "jsonrecords", "jsonarrays")
 
-  /** Request families with their shares (per 100 requests). */
-  val families: IndexedSeq[(String, Int)] = IndexedSeq(
-    "agg" -> 32, "top" -> 9, "growth" -> 9, "rca" -> 6, "rate" -> 7,
-    "ll_data" -> 17, "props" -> 5, "members" -> 4, "median" -> 3, "supplier" -> 8)
+  /** The repository's curated OLAP query set (SparkEntry's q01–q56), each
+    * by the request family it exercises; the stream mix follows their
+    * counts. q28_diagnosis is a data-quality report, not a dashboard
+    * request, and has no family. */
+  val curated: Map[String, String] = Map(
+    "q01_agg" -> "agg", "q02_dim_join" -> "agg", "q03_multi_dim" -> "agg", "q04_cut_in" -> "agg",
+    "q05_cut_exclude" -> "agg", "q06_cut_like" -> "agg", "q07_having" -> "agg",
+    "q08_top" -> "top", "q09_top_where" -> "top",
+    "q10_sort_limit" -> "agg", "q11_limit_offset" -> "agg", "q12_parents" -> "agg",
+    "q13_props" -> "props", "q14_inline" -> "agg", "q15_growth" -> "growth", "q16_rca" -> "rca",
+    "q17_rate" -> "rate", "q18_weighted" -> "agg", "q19_moe" -> "agg", "q20_median" -> "median",
+    "q21_sparse_avg" -> "agg", "q22_default_member" -> "agg", "q23_exclude_default" -> "agg",
+    "q24_year_month" -> "agg", "q25_members" -> "members", "q26_cut_only" -> "agg",
+    "q27_degenerate_cut" -> "agg", "q29_rw_moe" -> "agg", "q30_wavg_moe" -> "agg",
+    "q31_cut_fanout" -> "ll_data", "q32_exclude" -> "ll_data", "q33_captions" -> "props",
+    "q34_json_schema" -> "agg", "q35_time_latest" -> "ll_data", "q36_cut_children" -> "ll_data",
+    "q37_named_set" -> "ll_data", "q38_rca_debug" -> "rca", "q39_growth_filter" -> "growth",
+    "q40_growth_month" -> "growth", "q41_top_rca" -> "rca", "q42_xml_schema" -> "agg",
+    "q43_median_custom" -> "median", "q44_preagg" -> "agg", "q45_ll_locale" -> "ll_data",
+    "q46_ll_topwhere" -> "ll_data", "q47_approx_distinct" -> "agg", "q48_growth_timeonly" -> "growth",
+    "q49_multi_hierarchy" -> "agg", "q50_growth_top_mh" -> "growth", "q51_shared_dim" -> "agg",
+    "q52_ll_fused" -> "ll_data", "q53_rca_fanout" -> "ll_data", "q54_rca_avg" -> "rca",
+    "q55_rca_wsum" -> "rca", "q56_rca_max" -> "rca")
 
-  /** Family of the i-th request: a fixed interleaving in which every 100
+  /** Request families with their shares: how many curated queries each
+    * has (agg 27, ll_data 9, rca 6, growth 5, top, props and median 2
+    * each, rate and members 1 each; 55 in all). */
+  val families: IndexedSeq[(String, Int)] =
+    curated.values.groupBy(identity).view.mapValues(_.size).toIndexedSeq.sortBy { case (f, n) => (-n, f) }
+
+  /** Family of the i-th request: a fixed interleaving in which every 55
     * consecutive requests hold each family exactly its share, so two
     * seeds differ in what is asked, never in the mix of request kinds. */
   val familyOrder: IndexedSeq[String] = {
@@ -161,18 +186,12 @@ object RequestGen {
         val d = pick(r, IndexedSeq(Flag, Status, Klass))
         Request(family, agg, Seq("drilldowns" -> d.spelling, "measures" -> "Median Order Quantity") ++
           (if (r.nextBoolean()) Seq("cuts" -> s"${Year.spelling}.${members(r, Year, 2)}") else Nil))
-      case "supplier" =>
-        // a fine level: one nation's suppliers, ranked
-        val m = pick(r, measures)
-        Request(family, agg, Seq("drilldowns" -> Supplier.spelling, "measures" -> m,
-          "cuts" -> s"${Nation.spelling}.${members(r, Nation, 2)}",
-          "sort" -> s"$m.${if (r.nextBoolean()) "desc" else "asc"}", "limit" -> s"${5 + r.nextInt(20)}"))
     }
   }
 
   /** `n` pairwise-distinct requests (distinct in what they ask, not by a
     * nonce), deterministic in `seed`; the i-th is of family
-    * `familyOrder(i % 100)`. */
+    * `familyOrder(i % familyOrder.size)`. */
   def distinct(seed: Long, n: Int): IndexedSeq[Request] = {
     val r = new Random(seed)
     val seen = scala.collection.mutable.HashSet[String]()

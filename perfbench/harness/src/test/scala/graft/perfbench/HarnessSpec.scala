@@ -16,16 +16,14 @@ class HarnessSpec extends AnyFunSuite {
     assert(RequestGen.zipfStream(7, 5000, 1024, 1.2) != RequestGen.zipfStream(8, 5000, 1024, 1.2))
   }
 
-  test("olap_unique repeats no request") {
-    val Serve.Streams(prefill, stream) = Serve.streams("olap_unique", 11)
-    assert(prefill.isEmpty)
-    val uris = (0 until 1200).map(i => stream(i).uri)
+  test("the request pool repeats no request") {
+    val uris = RequestGen.distinct(Serve.PoolSeed, Serve.ZipfPool).map(_.uri)
     assert(uris.distinct.size == uris.size)
   }
 
   test("the olap_zipf pool outgrows the 256-entry response cache, and its stream reaches past it") {
     assert(Serve.ZipfPool > 256)
-    val Serve.Streams(prefill, stream) = Serve.streams("olap_zipf", 11)
+    val Serve.Streams(prefill, stream) = Serve.streams(11)
     val seen = (0 until 5000).map(i => stream(i).uri).toSet
     assert(seen.size > 256)
     assert(prefill.map(_.uri).distinct.size == Serve.Prefill)
@@ -44,11 +42,28 @@ class HarnessSpec extends AnyFunSuite {
     }
   }
 
-  test("every 100 requests hold each family exactly its share") {
+  test("the family mix is the curated query set's, and every period holds it exactly") {
+    val olap = graft.SparkEntry.queries.keySet.filter(_.matches("q\\d\\d_.*"))
+    assert(RequestGen.curated.keySet == olap - "q28_diagnosis")
     val shares = RequestGen.families.toMap
-    RequestGen.distinct(5, 300).grouped(100).foreach { blk =>
+    assert(shares.values.sum == RequestGen.familyOrder.size)
+    val period = RequestGen.familyOrder.size
+    RequestGen.distinct(5, 3 * period).grouped(period).foreach { blk =>
       assert(blk.groupBy(_.family).view.mapValues(_.size).toMap == shares)
     }
+  }
+
+  test("the driver-side p52 oracle marks a near copy as a duplicate of the lower id") {
+    val r = new scala.util.Random(3)
+    val vs = (0L until 16L).map(i => i -> Array.fill(8)(r.nextGaussian().toFloat))
+    val copy = 16L -> vs(5)._2.map(_ + 1e-4f)
+    val rows = TrainedOracle.verdict(vs, vs :+ copy, 1024, 0.99)
+    assert(rows.map(_.vecId) == (0L to 16L))
+    assert(rows.last.dupOf.contains(5L) && rows.last.kept == 0L)
+    assert(rows.init.forall(_.kept == 1L))
+    assert(rows.forall(_.cid.isDefined))
+    // a cap of one membership pairs nothing
+    assert(TrainedOracle.verdict(vs, vs :+ copy, 1, 0.99).forall(_.kept == 1L))
   }
 
   test("CDC feeds and vector churn are deterministic per seed, and feeds are disjoint by id") {

@@ -9,7 +9,7 @@ fixture; later runs start the harness JVM directly from the recorded
 classpath. Spark's logs go to files under the build directory, so standard
 output carries only the metric lines and, last, the result object.
 
-Workloads: olap_unique, olap_zipf, ingest_cdc (see perfbench/README.md).
+Workloads: olap_zipf, ingest_cdc (see perfbench/README.md).
 Exit status: 0 when every operation succeeded and every checked output was
 correct; non-zero otherwise, or when the program's sources are missing.
 """
@@ -24,7 +24,7 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 HARNESS = os.path.join(HERE, "harness")
-WORKLOADS = ("olap_unique", "olap_zipf", "ingest_cdc")
+WORKLOADS = ("olap_zipf", "ingest_cdc")
 RUN_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 800
 HEAP = "3g"
